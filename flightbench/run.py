@@ -14,12 +14,12 @@ workloads, metrics and how the numbers were tuned.
 from __future__ import annotations
 
 import argparse
-import concurrent.futures
 import json
-import multiprocessing
 import os
+import pickle
 import shutil
 import statistics
+import subprocess
 import sys
 import tempfile
 import time
@@ -125,13 +125,18 @@ class Bench:
     def generate(self):
         """Write this run's inputs in a child process, so the generator's
         memory stays out of the client's peak RSS; returns the expected
-        output."""
+        output. A plain subprocess rather than multiprocessing, whose
+        resource tracker would outlive this process."""
         t = time.perf_counter()
-        ctx = multiprocessing.get_context("spawn")
-        with concurrent.futures.ProcessPoolExecutor(1, mp_context=ctx) as pool:
-            out = pool.submit(generate, self.args.workload, self.args.seed, self.work).result()
+        out = os.path.join(self.work, "expected.pickle")
+        child = (f"import pickle, sys; sys.path.insert(0, {HERE!r}); import run; "
+                 f"pickle.dump(run.generate({self.args.workload!r}, {self.args.seed!r}, {self.work!r}), "
+                 f"open({out!r}, 'wb'))")
+        subprocess.run([sys.executable, "-c", child], check=True)
+        with open(out, "rb") as f:
+            expected = pickle.load(f)
         self.gen_s = time.perf_counter() - t
-        return out
+        return expected
 
     # ------------------------------------------------------------ setup
     def start(self) -> None:
@@ -164,17 +169,28 @@ class Bench:
         self.phases["session_s"] = time.perf_counter() - self.t_setup
 
     def stop(self) -> None:
+        """Stop the session and the JVM it launched, and wait for the JVM
+        to end, also when the session never finished starting."""
         from pyspark import SparkContext
 
         gateway = SparkContext._gateway
-        self.spark.stop()
-        self.oracle.close()
-        if gateway is not None:
-            proc = gateway.proc
-            gateway.shutdown()
-            if proc is not None:
-                proc.stdin.close()
-                proc.wait(timeout=60)
+        try:
+            if SparkContext._active_spark_context is not None:
+                SparkContext._active_spark_context.stop()
+        finally:
+            self.oracle.close()
+            if gateway is not None:
+                proc = gateway.proc
+                try:
+                    gateway.shutdown()
+                finally:
+                    if proc is not None:
+                        proc.stdin.close()
+                        try:
+                            proc.wait(timeout=60)
+                        except subprocess.TimeoutExpired:
+                            proc.kill()
+                            proc.wait()
 
     # ---------------------------------------------------- pipeline parts
     def extract(self, lake_dir: str) -> list:
@@ -526,8 +542,10 @@ def main() -> int:
         if args.trace:
             b.tracer.dump(os.path.join(root, ".bench_out", f"trace-{args.workload}-{args.seed}.jsonl"))
     finally:
-        if hasattr(b, "spark"):
+        if "pyspark" in sys.modules:
             b.stop()
+        else:
+            b.oracle.close()
         shutil.rmtree(work, ignore_errors=True)
     print(json.dumps(result))
     return 0
