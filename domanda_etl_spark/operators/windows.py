@@ -33,48 +33,14 @@ def latest_wins(
 
     The reference realizes this as a GLOBAL sort + drop_duplicates
     (reference etl/pipeline.py:56); at 100 TB a total sort is the wrong
-    plan — a partitioned window (single hash shuffle, map-side combinable
-    by AQE) computes the same result. The group key covers ~93 columns in
-    the domanda pipeline, so the shuffle key is pre-hashed to one 64-bit
-    column to keep shuffle rows narrow.
+    plan. When the keys are every other column (the domanda pipeline's
+    ~93-column case) the rows of a group differ only in `version_col`, so
+    a hash aggregate of its max is exact and map-side combinable; other
+    key sets take a partitioned window (single hash shuffle).
     """
     keys = key_cols if key_cols is not None else [c for c in df.columns if c != version_col]
+    if set(keys) == set(df.columns) - {version_col}:
+        return df.groupBy(*keys).agg(F.max(version_col).alias(version_col)).select(*df.columns)
     order = [F.col(version_col).desc()] + (tiebreakers or [])
-    if len(keys) > 4:
-        # Shuffle/sort on two independent 64-bit hashes (~128-bit key)
-        # instead of a 90+-column tuple: same shuffle volume (full rows move
-        # either way) but a radically cheaper sort comparator; collision
-        # probability is negligible even at 100 TB row counts, unlike a
-        # single xxhash64.
-        #
-        # Spark hash expressions SKIP null inputs (the hash state is left
-        # unchanged), so ('a', NULL) and (NULL, 'a') would collide. A
-        # null-position bitmask prepended to the hash input makes null
-        # placement part of the key: same mask => same null positions, and
-        # the non-null values are then consumed in identical column order.
-        # Composed as SQL strings (one F.expr each) rather than nested
-        # Column calls: the Column form costs ~5 py4j round-trips per key
-        # column × 90+ keys of pure plan-construction latency; the parse
-        # happens JVM-side in one call. Equivalence is covered by the
-        # latest-wins golden tests.
-        q = ["`" + k.replace("`", "``") + "`" for k in keys]
-        null_mask = (
-            "concat_ws(''"
-            + "".join(f", CAST(CAST(({c} IS NULL) AS INT) AS STRING)" for c in q)
-            + ")"
-        )
-        cols = ", ".join(q)
-        hashed = df.withColumns(
-            {
-                "__gk1": F.expr(f"xxhash64({null_mask}, {cols})"),
-                "__gk2": F.expr(f"xxhash64('salt', {null_mask}, {cols})"),
-            }
-        )
-        w = Window.partitionBy("__gk1", "__gk2").orderBy(*order)
-        return (
-            hashed.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__gk1", "__gk2")
-        )
     w = Window.partitionBy(*keys).orderBy(*order)
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")

@@ -5,11 +5,12 @@ The reference hand-rolls atomicity against Postgres: CTAS backup ->
 TRUNCATE -> row-wise INSERT -> verification read -> restore-from-backup on
 failure, keep newest 3 backups (reference etl/loader.py:159-348). With a
 versioned table all of that collapses into: every write lands in a fresh
-`_v{n}` directory, a manifest pointer flips atomically (os.replace) only
-after the write fully succeeds, `restore` is a pointer flip to an older
-version, and retention vacuums old directories. Delta Lake provides exactly
-this on a real lake; this implementation is dependency-free (Delta is not
-installed here) with the same operator surface.
+`_s{n}` segment directory, a manifest pointer flips atomically (os.replace)
+only after the write fully succeeds, `restore` is a pointer flip to an older
+version, and retention vacuums segments no retained version references.
+Delta Lake provides exactly this on a real lake; this implementation is
+dependency-free (Delta is not installed here) with the same operator
+surface.
 
 Single-writer semantics (matching the reference's advisory-lock discipline,
 etl/loader.py:169-174).
@@ -27,15 +28,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-class VersionedTable:
+class _VersionLog:
+    """The version log both table classes share: `_manifest.json` holds
+    `current`, `next_id`, `next_seg` and one entry per retained version
+    (`id`, `ts`, `op`, plus the segment references under `_REFS`).
+    Subclasses supply how a segment is written, which segments an entry
+    references (`_segments`) and how a version is read (`read`)."""
+
     MAX_VERSIONS = 3  # reference MAX_BACKUPS = 3 (etl/loader.py:324)
+    _REFS: str
 
     def __init__(self, path: str, max_versions: int | None = None):
         self.path = path
         self.max_versions = max_versions or self.MAX_VERSIONS
         os.makedirs(path, exist_ok=True)
 
-    # ---------------- manifest -------------------------------------------
     @property
     def _manifest_path(self) -> str:
         return os.path.join(self.path, "_manifest.json")
@@ -45,15 +52,15 @@ class VersionedTable:
             return {"current": None, "next_id": 0, "next_seg": 0, "versions": []}
         with open(self._manifest_path) as f:
             m = json.load(f)
-        legacy = [e["id"] for e in m.get("versions", []) if "segments" not in e]
+        legacy = [e["id"] for e in m.get("versions", []) if self._REFS not in e]
         if legacy:
             # pre-segment-manifest layout (per-version _v{N} dirs): refuse
             # loudly instead of failing with a bare KeyError deep in read()
             raise ValueError(
                 f"{self.path}: manifest versions {legacy} use the legacy "
-                "per-version layout (no 'segments' list). Re-materialize the "
-                "table by reading the _v{N} parquet directly and overwrite() "
-                "into a fresh VersionedTable."
+                f"per-version layout (no '{self._REFS}' entry). Re-materialize "
+                "the table by reading the _v{N} parquet directly and "
+                "overwrite() into a fresh table."
             )
         return m
 
@@ -69,33 +76,86 @@ class VersionedTable:
     def _sdir(self, segment: int) -> str:
         return os.path.join(self.path, f"_s{segment}")
 
-    def _version_entry(self, m: dict, version: int) -> dict:
+    def _entry(self, m: dict, version: int | None = None) -> dict:
+        """Manifest entry of `version` (default: the current version)."""
+        v = m["current"] if version is None else version
+        if v is None:
+            raise FileNotFoundError(f"{self.path}: empty table")
         for e in m["versions"]:
-            if e["id"] == version:
+            if e["id"] == v:
                 return e
-        raise FileNotFoundError(f"{self.path}: version {version} vacuumed or unknown")
+        raise FileNotFoundError(f"{self.path}: version {v} vacuumed or unknown")
 
-    def _commit_version(self, m: dict, op: str, segments: list[int]) -> int:
+    def _commit(self, m: dict, op: str, refs, **extra) -> int:
+        """Publish a new current version and apply S8 retention in ONE
+        manifest replace: keep the newest `max_versions` versions (the new
+        one is the newest, so current is never dropped), then vacuum the
+        segment directories only dropped versions referenced (a segment
+        shared with a retained version survives — this is what makes
+        O(delta) appends safe to vacuum). Directories are removed only
+        after the replace, so a crash mid-vacuum leaves orphan directories,
+        never a listed version whose files are gone."""
         v = m["next_id"]
         m["versions"].append(
-            {"id": v, "ts": time.time(), "op": op, "segments": segments}
+            {"id": v, "ts": time.time(), "op": op, self._REFS: refs, **extra}
         )
-        m["current"] = v
-        m["next_id"] = v + 1
+        m["current"], m["next_id"] = v, v + 1
+        kept = sorted(m["versions"], key=lambda e: e["id"])[-self.max_versions:]
+        live = {s for e in kept for s in self._segments(e)}
+        dead = {s for e in m["versions"] for s in self._segments(e)} - live
+        m["versions"] = kept
         self._write_manifest(m)
-        self._cleanup_old_versions()
+        for s in dead:
+            shutil.rmtree(self._sdir(s), ignore_errors=True)
         return v
 
-    # ---------------- write paths ----------------------------------------
-    def overwrite(self, df: DataFrame) -> int:
-        """S5 truncate-and-load: full refresh as a new version. On ANY write
-        failure the pointer never moves — the reference's restore-on-failure
-        path (etl/loader.py:233-238) is unnecessary by construction."""
+    def history(self) -> list[dict]:
+        """S6/DESCRIBE HISTORY — retained versions, newest first."""
+        return sorted(self._read_manifest()["versions"], key=lambda e: -e["id"])
+
+    def restore(self, spark: SparkSession, version: int | None = None) -> int:
+        """S7 restore-from-backup: flip the pointer to `version` (default:
+        newest version before current — the reference's 'latest backup').
+        Verifies the restored version is readable and row-counted, the
+        reference's count check (etl/loader.py:290-298)."""
+        m = self._read_manifest()
+        if version is None:
+            older = [e["id"] for e in m["versions"] if e["id"] < (m["current"] or 0)]
+            if not older:
+                raise FileNotFoundError(f"{self.path}: no prior version to restore")
+            version = max(older)
+        # verification read BEFORE the pointer flip (S7; raises if the
+        # version was vacuumed) — a plain statement, not an assert, so
+        # `python -O` cannot strip the read
+        self.read(spark, version).count()
+        m["current"] = version
+        self._write_manifest(m)
+        return version
+
+
+class VersionedTable(_VersionLog):
+    _REFS = "segments"
+
+    def _segments(self, entry: dict) -> list[int]:
+        return entry["segments"]
+
+    def _publish(self, df: DataFrame, op: str, stack: bool = False) -> int:
+        """Write `df` as one fresh segment and commit it as a version whose
+        segments are that segment alone, or — with `stack` — the current
+        version's segments plus it. On ANY write failure the pointer never
+        moves — the reference's restore-on-failure path
+        (etl/loader.py:233-238) is unnecessary by construction."""
         m = self._read_manifest()
         seg = m.get("next_seg", 0)
         df.write.mode("overwrite").parquet(self._sdir(seg))
         m["next_seg"] = seg + 1
-        return self._commit_version(m, "overwrite", [seg])
+        prev = self._entry(m)["segments"] if stack and m["current"] is not None else []
+        return self._commit(m, op, [*prev, seg])
+
+    # ---------------- write paths ----------------------------------------
+    def overwrite(self, df: DataFrame) -> int:
+        """S5 truncate-and-load: full refresh as a new version."""
+        return self._publish(df, "overwrite")
 
     def append(self, df: DataFrame) -> int:
         """S4 batch insert, O(delta) not O(table): ONLY the appended rows are
@@ -103,14 +163,7 @@ class VersionedTable:
         references the previous version's segments plus the new one —
         Delta-style copy-on-write at the FILE-SET level, so appending N rows
         to a 100 TB table costs N rows of IO, not a full rewrite."""
-        m = self._read_manifest()
-        seg = m.get("next_seg", 0)
-        df.write.mode("overwrite").parquet(self._sdir(seg))
-        m["next_seg"] = seg + 1
-        prev_segments: list[int] = []
-        if m["current"] is not None:
-            prev_segments = list(self._version_entry(m, m["current"])["segments"])
-        return self._commit_version(m, "append", prev_segments + [seg])
+        return self._publish(df, "append", stack=True)
 
     def compact(self, spark: SparkSession, target_partitions: int | None = None) -> int:
         """OPTIMIZE / small-file compaction: after many O(delta) appends the
@@ -122,11 +175,7 @@ class VersionedTable:
         df = self.read(spark)
         if target_partitions is not None:
             df = df.coalesce(target_partitions)
-        m = self._read_manifest()
-        seg = m.get("next_seg", 0)
-        df.write.mode("overwrite").parquet(self._sdir(seg))
-        m["next_seg"] = seg + 1
-        return self._commit_version(m, "compact", [seg])
+        return self._publish(df, "compact")
 
     def merge_upsert(
         self, spark: SparkSession, updates: DataFrame, keys: list[str]
@@ -146,8 +195,7 @@ class VersionedTable:
         except FileNotFoundError:
             return self.overwrite(updates)
         kept = current.join(updates.select(*keys).distinct(), keys, "left_anti")
-        merged = kept.unionByName(updates, allowMissingColumns=True)
-        return self.overwrite(merged)
+        return self._publish(kept.unionByName(updates, allowMissingColumns=True), "merge")
 
     def delete_where(self, spark: SparkSession, condition) -> int:
         """Targeted row deletion (GDPR / right-to-be-forgotten): publishes a
@@ -157,67 +205,17 @@ class VersionedTable:
         partitions. Pre-delete versions remain restorable until retention
         vacuums them (the compliance window is `max_versions` deep —
         tighten retention when deletion must become durable)."""
-        survivors = self.read(spark).filter(~condition)
-        return self.overwrite(survivors)
+        return self._publish(self.read(spark).filter(~condition), "delete")
 
-    # ---------------- read / history / restore ---------------------------
+    # ---------------- read / verification --------------------------------
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        m = self._read_manifest()
-        v = m["current"] if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"{self.path}: empty table")
-        segments = self._version_entry(m, v)["segments"]
+        segments = self._entry(self._read_manifest(), version)["segments"]
         # mergeSchema: appended segments may carry evolved schemas (the old
         # unionByName(allowMissingColumns=True) semantics, now at scan time)
         return spark.read.option("mergeSchema", "true").parquet(
             *[self._sdir(s) for s in segments]
         )
 
-    def history(self) -> list[dict]:
-        """S6/DESCRIBE HISTORY — retained versions, newest first."""
-        return sorted(self._read_manifest()["versions"], key=lambda e: -e["id"])
-
-    def restore(self, spark: SparkSession, version: int | None = None) -> int:
-        """S7 restore-from-backup: flip the pointer to `version` (default:
-        newest version before current — the reference's 'latest backup').
-        Verifies the restored version is readable and row-counted, the
-        reference's count check (etl/loader.py:290-298)."""
-        m = self._read_manifest()
-        if version is None:
-            older = [e["id"] for e in m["versions"] if e["id"] < (m["current"] or 0)]
-            if not older:
-                raise FileNotFoundError(f"{self.path}: no prior version to restore")
-            version = max(older)
-        self._version_entry(m, version)  # raises if vacuumed
-        # verification read BEFORE the pointer flip (S7) — a plain
-        # statement, not an assert, so `python -O` cannot strip the read
-        self.read(spark, version).count()
-        m["current"] = version
-        self._write_manifest(m)
-        return version
-
-    def _cleanup_old_versions(self) -> None:
-        """S8 retention: keep the newest `max_versions` versions (and never
-        drop current); vacuum segment directories no retained version
-        references (a segment shared by a retained and a dropped version
-        survives — this is what makes O(delta) appends safe to vacuum)."""
-        m = self._read_manifest()
-        keep = {e["id"] for e in sorted(m["versions"], key=lambda e: -e["id"])[: self.max_versions]}
-        if m["current"] is not None:
-            keep.add(m["current"])
-        dropped = [e for e in m["versions"] if e["id"] not in keep]
-        if not dropped:
-            return
-        kept_entries = [e for e in m["versions"] if e["id"] in keep]
-        referenced = {s for e in kept_entries for s in e["segments"]}
-        for e in dropped:
-            for s in e["segments"]:
-                if s not in referenced:
-                    shutil.rmtree(self._sdir(s), ignore_errors=True)
-        m["versions"] = kept_entries
-        self._write_manifest(m)
-
-    # ---------------- verification ---------------------------------------
     def verify_write(self, spark: SparkSession, predicates: dict[str, object]) -> bool:
         """S9 post-write verification read: point query on equality
         predicates, >= 1 row expected (reference etl/loader.py:68-89)."""
@@ -228,7 +226,7 @@ class VersionedTable:
         return df.filter(cond).limit(1).count() > 0
 
 
-class PartitionedVersionedTable:
+class PartitionedVersionedTable(_VersionLog):
     """VersionedTable with PARTITION-LEVEL copy-on-write — the shape that
     makes MERGE O(affected partitions) instead of O(table) at 100 TB.
 
@@ -246,33 +244,14 @@ class PartitionedVersionedTable:
     without type inference) — cast on read if a typed column is needed.
     """
 
+    _REFS = "parts"
+
     def __init__(self, path: str, partition_col: str, max_versions: int | None = None):
-        self.path = path
         self.partition_col = partition_col
-        self.max_versions = max_versions or VersionedTable.MAX_VERSIONS
-        os.makedirs(path, exist_ok=True)
+        super().__init__(path, max_versions)
 
-    # -- manifest ----------------------------------------------------------
-    @property
-    def _manifest_path(self) -> str:
-        return os.path.join(self.path, "_manifest.json")
-
-    def _read_manifest(self) -> dict:
-        if not os.path.exists(self._manifest_path):
-            return {"current": None, "next_id": 0, "next_seg": 0, "versions": []}
-        with open(self._manifest_path) as f:
-            return json.load(f)
-
-    _write_manifest = VersionedTable._write_manifest
-
-    def _sdir(self, segment: int) -> str:
-        return os.path.join(self.path, f"_s{segment}")
-
-    def _entry(self, m: dict, version: int) -> dict:
-        for e in m["versions"]:
-            if e["id"] == version:
-                return e
-        raise FileNotFoundError(f"{self.path}: version {version} vacuumed or unknown")
+    def _segments(self, entry: dict) -> list[int]:
+        return [s for segs in entry["parts"].values() for s in segs]
 
     # -- write paths -------------------------------------------------------
     def _write_segment(self, df: DataFrame, m: dict) -> tuple[int, list[str]]:
@@ -294,21 +273,13 @@ class PartitionedVersionedTable:
         return seg, parts
 
     def _commit(self, m: dict, op: str, parts: dict[str, list[int]]) -> int:
-        v = m["next_id"]
         # schema is pinned PER VERSION (Delta-log style): m["schema"] holds
         # the latest write's schema at commit time, so each entry records
         # the schema in force when it was published — merge_upsert with
         # allowMissingColumns=True may evolve it between versions, and
         # read(version=old) must type its empty-frame path with THAT
         # version's schema, not the latest write's (ADVICE r12)
-        m["versions"].append(
-            {"id": v, "ts": time.time(), "op": op, "parts": parts, "schema": m.get("schema")}
-        )
-        m["current"] = v
-        m["next_id"] = v + 1
-        self._write_manifest(m)
-        self._vacuum()
-        return v
+        return super()._commit(m, op, parts, schema=m.get("schema"))
 
     def overwrite(self, df: DataFrame) -> int:
         m = self._read_manifest()
@@ -322,7 +293,7 @@ class PartitionedVersionedTable:
         seg, parts = self._write_segment(df, m)
         merged: dict[str, list[int]] = {}
         if m["current"] is not None:
-            merged = {k: list(v) for k, v in self._entry(m, m["current"])["parts"].items()}
+            merged = {k: list(v) for k, v in self._entry(m)["parts"].items()}
         for p in parts:
             merged.setdefault(p, []).append(seg)
         return self._commit(m, "append", merged)
@@ -361,7 +332,7 @@ class PartitionedVersionedTable:
             str(r[pc])
             for r in updates.select(F.col(pc).cast("string")).distinct().collect()
         ]
-        prev = self._entry(m, m["current"])["parts"]
+        prev = self._entry(m)["parts"]
         touched = [p for p in affected if p in prev]
         if touched:
             current_slice = self._read_parts(spark, {p: prev[p] for p in touched})
@@ -392,8 +363,7 @@ class PartitionedVersionedTable:
         vacuums them; tighten `max_versions` when deletion must become
         durable."""
         m = self._read_manifest()
-        if m["current"] is None:
-            raise FileNotFoundError(f"{self.path}: empty table")
+        prev = self._entry(m)["parts"]  # raises on an empty table
         # same single-evaluation pinning as merge_upsert: the partition
         # collect and the anti-join must see identical delete rows
         deletes = deletes.localCheckpoint(eager=True)
@@ -402,7 +372,6 @@ class PartitionedVersionedTable:
             str(r[pc])
             for r in deletes.select(F.col(pc).cast("string")).distinct().collect()
         ]
-        prev = self._entry(m, m["current"])["parts"]
         touched = [p for p in affected if p in prev]
         new_parts = {k: list(v) for k, v in prev.items() if k not in set(touched)}
         if touched:
@@ -418,7 +387,7 @@ class PartitionedVersionedTable:
                 new_parts[p] = [seg]
         return self._commit(m, "delete", new_parts)
 
-    # -- read / restore ----------------------------------------------------
+    # -- read --------------------------------------------------------------
     def _read_parts(self, spark: SparkSession, parts: dict[str, list[int]]) -> DataFrame:
         pc = self.partition_col
         out: DataFrame | None = None
@@ -453,10 +422,7 @@ class PartitionedVersionedTable:
         for pre-r13 manifests. FileNotFoundError is reserved for a table
         with no versions at all or a vacuumed/unknown version id."""
         m = self._read_manifest()
-        v = m["current"] if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"{self.path}: empty table")
-        entry = self._entry(m, v)
+        entry = self._entry(m, version)
         parts = entry["parts"]
         if partitions is not None:
             parts = {p: parts[p] for p in partitions if p in parts}
@@ -478,41 +444,6 @@ class PartitionedVersionedTable:
             )
             return spark.createDataFrame([], schema)
         return self._read_parts(spark, parts)
-
-    def history(self) -> list[dict]:
-        return sorted(self._read_manifest()["versions"], key=lambda e: -e["id"])
-
-    def restore(self, spark: SparkSession, version: int | None = None) -> int:
-        m = self._read_manifest()
-        if version is None:
-            older = [e["id"] for e in m["versions"] if e["id"] < (m["current"] or 0)]
-            if not older:
-                raise FileNotFoundError(f"{self.path}: no prior version to restore")
-            version = max(older)
-        self._entry(m, version)
-        # plain statement (not assert): the verification read must survive -O
-        self.read(spark, version).count()
-        m["current"] = version
-        self._write_manifest(m)
-        return version
-
-    def _vacuum(self) -> None:
-        m = self._read_manifest()
-        keep = {e["id"] for e in sorted(m["versions"], key=lambda e: -e["id"])[: self.max_versions]}
-        if m["current"] is not None:
-            keep.add(m["current"])
-        dropped = [e for e in m["versions"] if e["id"] not in keep]
-        if not dropped:
-            return
-        kept_entries = [e for e in m["versions"] if e["id"] in keep]
-        referenced = {s for e in kept_entries for segs in e["parts"].values() for s in segs}
-        for e in dropped:
-            for segs in e["parts"].values():
-                for s in segs:
-                    if s not in referenced:
-                        shutil.rmtree(self._sdir(s), ignore_errors=True)
-        m["versions"] = kept_entries
-        self._write_manifest(m)
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:

@@ -97,9 +97,9 @@ def test_salted_join_rejects_outer(spark):
 
 
 def test_latest_wins_null_shifted_keys(spark):
-    """Hashed-key path (>4 keys): tuples that differ only in WHERE the null
-    sits must stay distinct — Spark hash exprs skip null inputs, so without
-    the null-position mask ('a',NULL,..) and (NULL,'a',..) collide."""
+    """Keys = every other column (the group-by path): tuples that differ
+    only in WHERE the null sits must stay distinct — ('a',NULL,..) and
+    (NULL,'a',..) are different groups."""
     from domanda_etl_spark.operators.windows import latest_wins
 
     rows = [

@@ -109,9 +109,9 @@ def test_jaccard_bounds_and_symmetry(spark, a, b):
     )
 )
 def test_latest_wins_hashed_matches_python_reference(spark, rows):
-    """The hashed-key path (>4 keys) must group EXACTLY like the key tuple —
-    including null placement (the r1 null-collision bug) and values equal to
-    the mask sentinel text."""
+    """The group-by path (keys = every other column) must group EXACTLY
+    like the key tuple — including null placement and values equal to the
+    text "<NULL>"."""
     df = spark.createDataFrame(
         rows, "k1 string, k2 string, k3 string, k4 string, k5 string, v int"
     )

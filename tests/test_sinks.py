@@ -3,15 +3,27 @@
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
-from domanda_etl_spark.sinks import VersionedTable, write_csv
+from domanda_etl_spark.sinks import PartitionedVersionedTable, VersionedTable, write_csv
 
 
 @pytest.fixture
 def table(tmp_path):
     return VersionedTable(str(tmp_path / "t"))
+
+
+@pytest.fixture(params=["plain", "partitioned"])
+def open_table(request, tmp_path):
+    """Opens (and reopens) one table path as either versioned table class;
+    the partitioned one puts every `name` value in its own partition."""
+    path = str(tmp_path / "t")
+    if request.param == "plain":
+        return lambda: VersionedTable(path)
+    return lambda: PartitionedVersionedTable(path, "name")
 
 
 def df_of(spark, *vals):
@@ -63,11 +75,12 @@ def test_append_schema_evolution(spark, table):
     assert rows == {(1, None), (2, "x")}
 
 
-def test_retention_vacuums_unreferenced_segments_only(spark, table):
+def test_retention_vacuums_unreferenced_segments_only(spark, open_table):
     """A base segment shared by retained append-versions must survive
     retention; segments only dropped versions reference are vacuumed."""
     import os
 
+    table = open_table()
     table.overwrite(df_of(spark, 1))          # v0 = [s0]
     for i in range(4):                        # v1..v4 = [s0, s1..]
         table.append(df_of(spark, 10 + i))
@@ -76,7 +89,31 @@ def test_retention_vacuums_unreferenced_segments_only(spark, table):
     assert table.read(spark).count() == 5
 
 
-def test_restore_latest_backup(spark, table):
+def test_vacuum_crash_leaves_every_listed_version_readable(spark, open_table, monkeypatch):
+    """A crash partway through vacuuming (a segment directory already gone)
+    must not leave the manifest listing a version whose files are gone."""
+    from domanda_etl_spark.sinks import versioned
+
+    rmtree = shutil.rmtree
+
+    def rmtree_then_crash(path, *args, **kwargs):
+        rmtree(path, *args, **kwargs)
+        raise RuntimeError("crash mid-vacuum")
+
+    table = open_table()
+    for i in range(table.max_versions):
+        table.overwrite(df_of(spark, i))
+    monkeypatch.setattr(versioned.shutil, "rmtree", rmtree_then_crash)
+    with pytest.raises(RuntimeError, match="mid-vacuum"):
+        table.overwrite(df_of(spark, 99))
+    monkeypatch.undo()
+    reopened = open_table()
+    for e in reopened.history():
+        assert reopened.read(spark, version=e["id"]).count() == 1
+
+
+def test_restore_latest_backup(spark, open_table):
+    table = open_table()
     table.overwrite(df_of(spark, 1, 2))
     table.overwrite(df_of(spark, 9))
     restored = table.restore(spark)
@@ -159,10 +196,10 @@ def test_compact_collapses_segments(spark, table):
     for i in range(3):
         table.append(df_of(spark, 10 + i))
     m = table._read_manifest()
-    assert len(table._version_entry(m, m["current"])["segments"]) == 4
+    assert len(table._entry(m, m["current"])["segments"]) == 4
     v = table.compact(spark, target_partitions=1)
     m = table._read_manifest()
-    entry = table._version_entry(m, v)
+    entry = table._entry(m, v)
     assert entry["op"] == "compact" and len(entry["segments"]) == 1
     assert table.read(spark).count() == 4
     seg_dir = table._sdir(entry["segments"][0])
@@ -241,6 +278,15 @@ def test_partitioned_append_restore_and_partition_pruned_read(spark, tmp_path):
     t.restore(spark, v0)
     assert t.read(spark).count() == 1
     assert t.history()[0]["op"] == "append"
+
+
+def test_merge_and_delete_record_their_op_in_history(spark, table):
+    table.overwrite(df_of(spark, 1, 2))
+    table.merge_upsert(spark, df_of(spark, 2, 3), ["id"])
+    assert table.history()[0]["op"] == "merge"
+    table.delete_where(spark, F.col("id") == 1)
+    assert table.history()[0]["op"] == "delete"
+    assert sorted(r["id"] for r in table.read(spark).collect()) == [2, 3]
 
 
 def test_delete_where_publishes_restorable_version(spark, table):
