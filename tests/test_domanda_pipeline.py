@@ -5,10 +5,12 @@ removal, and the 94-column output contract."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from domanda_etl_spark.plans import domanda
-from tests.flight_fixtures import NOW, build_frames
+from domanda_etl_spark.sources import Extractor
+from tests.flight_fixtures import CUTOFF, NOW, build_frames, write_lake
 
 
 def run(spark):
@@ -99,3 +101,55 @@ def test_supplier_validity_filter_removed_bad_rows(spark):
     # settour's 'C7' row must not leak its price anywhere
     out = run(spark)
     assert out.filter(F.col("settour_air_tickets_price") == 1).count() == 0
+
+
+def _three_leg_inputs(spark, path: str, shape: str) -> list:
+    """The six pipeline inputs over the three-leg lake, in three plan
+    shapes: through Extractor (production), as bare parquet scans (no
+    source DISTINCT, so the stage starts at the scan), and as local
+    frames of the same rows."""
+    ex = Extractor(spark, write_lake(spark, path), CUTOFF)
+    if shape == "scan":
+        scan = {k: spark.read.parquet(f"{path}/{t}.parquet") for k, t in Extractor.TABLES.items()}
+        ez = scan["eztravel"]
+        return [scan["cola"], scan["set"], scan["lion"],
+                ez.filter(~F.col("海外供應商")), ez.filter(F.col("海外供應商")), scan["rich"]]
+    frames = [
+        ex.extract_cola_data(), ex.extract_set_data(), ex.extract_lion_data(),
+        ex.extract_eztravel_data(), ex.extract_foreign_supplier_eztravel_data(),
+        ex.extract_rich_data(),
+    ]
+    if shape == "local":
+        return [spark.createDataFrame(f.collect(), f.schema) for f in frames]
+    return frames
+
+
+@pytest.mark.parametrize("shape", ["extractor", "scan", "local"])
+def test_three_leg_lake_compiles_without_codegen_fallback(spark, tmp_path, shape):
+    """The spine stage fuses the cola DISTINCT, cleaning, key
+    normalization, five broadcast joins, the 94-column projection and the
+    partial dedup aggregate into one generated class. With every leg's raw
+    columns present its projection method once outgrew janino's 64 KB
+    limit, and each execution paid a failed compile before falling back to
+    interpreted execution. spark.sql.codegen.fallback=false turns that
+    silent fallback into an error."""
+    frames = _three_leg_inputs(spark, str(tmp_path), shape)
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        rows = domanda.run_pipeline(*frames, now_epoch=NOW).collect()
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
+    # the one-leg fixtures fan out as in test_fanout_and_latest_wins
+    one_leg = [r for r in rows if r["departure_flight_number_2"] is None]
+    assert sum(r["departure_flight_number_1"] == "CI073" for r in one_leg) == 4
+    r = next(r for r in rows if r["final_price"] == 7700)
+    assert (r["departure_transfer_count"], r["return_transfer_count"]) == (2, 2)
+    assert r["departure_flight_number_3"] == "BR891"
+    assert r["return_flight_time_3"] == "06:10"
+    assert r["departure_arrival_flight_time_2"] == "05:05"
+    assert r["return_airport_2"] == "TPE"
+    assert r["departure_flight_duration_3"] == 56
+    assert (r["return_luggage_value_3"], r["return_luggage_unit_3"]) == (30.0, "公斤")
+    assert r["departure_aircraft_type_2"] == "A321"
+    assert r["settour_air_tickets_price"] == 7000

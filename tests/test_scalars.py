@@ -238,6 +238,9 @@ ADVERSARIAL_VALUES = ADVERSARIAL_KEYS + [
     "1件", "25 公斤", "20KG", "2.5kg", "無", "20KG/2件", "1.0件", "3.7",
     "0 days 02:05:00", "01:30:30", "95", "1 days 2:05", "02:05:31",
     "2025/11/5 8:3", "2025-11-5", "-2024-", "abc-def-ghi",
+    # shapes the rewritten time/duration/luggage twins must still agree on
+    "123:45", "x9:5", "0:00", "2025-11-05 9:5:00", "1days02:05:30", "12:30:3",
+    "公 斤", "2 k g", "3 K.G", "1 公 2 斤", "1件公斤", "1.2.3kg", ".5", "kg",
 ]
 
 
